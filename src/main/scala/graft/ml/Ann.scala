@@ -48,7 +48,7 @@ object Ann {
     */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
       nPlanes: Int = 8): DataFrame =
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"),
       Kernels.hyperplaneBucket(col(vecCol), nPlanes).as("bucket"))
 
@@ -220,7 +220,7 @@ object Ann {
     */
   def buildItqIndex(
       corpus: DataFrame, idCol: String, vecCol: String, model: LshModel): DataFrame =
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"),
       Kernels.learnedBucket(col(vecCol), model.planes, model.offsets).as("bucket"))
 
@@ -421,7 +421,7 @@ object Ann {
       "kmeansCluster: input already has a 'cluster' column — rename it first")
     val cents = trainCentroids(corpus, vecCol, nList = k, sampleN = sampleN,
       seed = seed, maxIter = maxIter, initMode = "k-means||")
-    graft.operators.Rebalance.scanAware(corpus).withColumn("cluster",
+    graft.operators.Rebalance.spread(corpus).withColumn("cluster",
       element_at(Kernels.nearestCentroids(col(vecCol), cents, 1), 1))
   }
 
@@ -463,9 +463,9 @@ object Ann {
   def buildIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame =
-    // scanAware: assignment is O(nList·d) flops per input byte — a
+    // assignment is O(nList·d) flops per input byte — a
     // monolith corpus file must not pin the whole build to one core
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .select(col(idCol).as("neighbour_id"), col(vecCol).as("cv"),
       element_at(Kernels.nearestCentroids(col(vecCol), centroids, 1), 1).as("list"))
 
@@ -970,7 +970,7 @@ object Ann {
       corpus: DataFrame, idCol: String, vecCol: String,
       coarse: Array[Array[Double]], flatCodebooks: Array[Array[Double]],
       codeK: Int = 256, rot: Array[Array[Double]] = null): DataFrame = {
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .withColumn("list", element_at(Kernels.nearestCentroids(col(vecCol), coarse, 1), 1))
       .select(col(idCol).as("neighbour_id"), col("list"),
         Kernels.pqEncode(col(vecCol), col("list"), coarse, flatCodebooks, codeK, rot)
@@ -1091,7 +1091,7 @@ object Ann {
     */
   def buildSqIndex(
       corpus: DataFrame, idCol: String, vecCol: String, p: SqParams): DataFrame =
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .select(col(idCol).as("neighbour_id"),
       Kernels.sqEncode(col(vecCol), p.lo, p.step).as("code"))
 
@@ -1195,7 +1195,7 @@ object Ann {
   def buildIvfSqIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], p: SqParams): DataFrame =
-    graft.operators.Rebalance.scanAware(corpus)
+    graft.operators.Rebalance.spread(corpus)
       .select(col(idCol).as("neighbour_id"),
       element_at(Kernels.nearestCentroids(col(vecCol), centroids, 1), 1).as("list"),
       Kernels.sqEncode(col(vecCol), p.lo, p.step).as("code"))

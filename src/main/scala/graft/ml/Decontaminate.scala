@@ -44,7 +44,7 @@ object Decontaminate {
       .select(xxhash64(col("g")).as("h")).distinct())
     val nDict = math.max(dict.count(), 1L)
     val bloom = dict.stat.bloomFilter("h", nDict, 0.01)
-    scope.releaseAfter(graft.operators.Rebalance.scanAware(docs)
+    scope.releaseAfter(graft.operators.Rebalance.spread(docs)
       .select(col(idCol).as("id"), explode(Kernels.wordShingles(col(textCol), n)).as("g"))
       .select(col("id"), xxhash64(col("g")).as("h"))
       .filter(Kernels.bloomMightContain(col("h"), bloom))
@@ -84,7 +84,7 @@ object Decontaminate {
       .select(xxhash64(col("g")).as("h")).distinct())
     val nDict = math.max(dict.count(), 1L)
     val bloom = dict.stat.bloomFilter("h", nDict, 0.01)
-    val grams = scope.persist(graft.operators.Rebalance.scanAware(docs)
+    val grams = scope.persist(graft.operators.Rebalance.spread(docs)
       .select(col(idCol), explode(Kernels.wordShingles(col(textCol), n)).as("g"))
       .select(col(idCol), xxhash64(col("g")).as("h")).distinct())
     val totals = grams.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))

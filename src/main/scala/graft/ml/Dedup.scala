@@ -137,7 +137,7 @@ object Dedup {
     * hash key (not the text) is the shuffle payload.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    Rebalance.scanAware(docs)
+    Rebalance.spread(docs)
       .select(col(idCol), TextFunctions.fingerprint(col(textCol)).as("fp"))
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
@@ -198,11 +198,11 @@ object Dedup {
     */
   private[graft] def shingleFrame(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
-    // scanAware: the shingle explode + signature kernels amplify the scan
-    // 10-100×, so a monolith input (one small compressed file → one task)
-    // must rebalance BEFORE this stage or it carries the whole pipeline
+    // the shingle explode + signature kernels amplify the scan 10-100×,
+    // so a monolith input (one small compressed file → one task) must
+    // spread BEFORE this stage or it carries the whole pipeline
     // single-threaded (see Rebalance)
-    Rebalance.scanAware(docs).select(col(idCol).as("id"),
+    Rebalance.spread(docs).select(col(idCol).as("id"),
       Kernels.wordShingles(col(textCol), shingleN).as("sh"))
       .withColumn("sz", size(array_distinct(col("sh"))))
       .filter(col("sz") > 0)
@@ -709,7 +709,7 @@ object Dedup {
     require(maxDistance == 1 || maxDistance == 2,
       s"editDistancePairs: maxDistance=$maxDistance (FastSS depth 1 or 2)")
     val scope = new CacheScope
-    val base = scope.persist(Rebalance.scanAware(docs)
+    val base = scope.persist(Rebalance.spread(docs)
       .select(col(idCol).as("id"), col(strCol).as("s"))
       .filter(col("s").isNotNull && length(col("s")) <= maxLen))
     val keys = base.select(col("id"), explode(array_distinct(
@@ -780,7 +780,7 @@ object Dedup {
     // non-Latin scripts under an ASCII normalizer — all hash identically
     // and would form a quadratic bucket; they are exact-dedup's job
     val toks = split(TextFunctions.normalized(col(textCol)), " ", -1)
-    val sig = Rebalance.scanAware(docs).where(size(toks) >= 3)
+    val sig = Rebalance.spread(docs).where(size(toks) >= 3)
       .select(col(idCol).as("id"), Kernels.simhash64(toks).as("sim"))
     hamming64Pairs(sig, "id", "sim", maxHamming, maxBucket, saltCap)
   }
@@ -862,7 +862,7 @@ object Dedup {
       minShared: Int = 2): DataFrame = {
     val scope = new CacheScope
     val sh = scope.persist(
-      Rebalance.scanAware(docs)
+      Rebalance.spread(docs)
         .select(col(idCol).as("id"), Kernels.wordShingles(col(textCol), shingleN).as("sh"))
         .withColumn("sz", size(array_distinct(col("sh")))))
     // deterministic hash-sampled posting list — no per-doc window/sort;
@@ -937,7 +937,7 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     val scope = new CacheScope
-    val sh = scope.persist(Rebalance.scanAware(docs).select(col(idCol).as("id"),
+    val sh = scope.persist(Rebalance.spread(docs).select(col(idCol).as("id"),
       array_distinct(Kernels.wordShingles(col(textCol), shingleN)).as("sh"))
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") > 0))
@@ -1066,7 +1066,7 @@ object Dedup {
     */
   private[ml] def containmentShingles(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
-    Rebalance.scanAware(docs).select(col(idCol).as("id"),
+    Rebalance.spread(docs).select(col(idCol).as("id"),
       array_distinct(Kernels.wordShingles(col(textCol), shingleN)).as("sh"))
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") > 0)
@@ -1220,7 +1220,7 @@ object Dedup {
       .filter(col(sz) > 0)
       .select(col(id), col(sz), explode(col("__sh")).as("shingle"))
     val probePost = posting(probe, "id_a", "sz_a")
-    val corpusPost = posting(Rebalance.scanAware(corpus), "id_b", "sz_b")
+    val corpusPost = posting(Rebalance.spread(corpus), "id_b", "sz_b")
     probePost.hint("broadcast").join(corpusPost, Seq("shingle"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(first(col("sz_a")).as("sz_a"), count(lit(1)).as("__ov"))
@@ -1367,10 +1367,13 @@ object Dedup {
     * cluster (the min id) + every unpaired doc.
     */
   def dedupedCorpus(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    // reserved names, as in canonicalPerCluster: a docs column called
+    // `id` or `label` is the caller's and must pass through
     val labels = connectedComponents(pairs)
-    docs.join(labels, docs(idCol) === labels("id"), "left")
-      .filter(col("label").isNull || col("label") === docs(idCol))
-      .drop("id", "label")
+      .select(col("id").as("__cc_id"), col("label").as("__cc_label"))
+    docs.join(labels, docs(idCol) === labels("__cc_id"), "left")
+      .filter(col("__cc_label").isNull || col("__cc_label") === docs(idCol))
+      .drop("__cc_id", "__cc_label")
   }
 
   /** Quality-aware canonical selection: keep ONE doc per near-dup
@@ -1425,7 +1428,7 @@ object Dedup {
       textCol: String,
       maxDocFreq: Int = 10): DataFrame = {
     val scope = new CacheScope
-    val lines = scope.persist(Rebalance.scanAware(docs).select(col(idCol).as("id"),
+    val lines = scope.persist(Rebalance.spread(docs).select(col(idCol).as("id"),
       posexplode(split(col(textCol), "\n", -1)).as(Seq("pos", "line")))
       .withColumn("h", xxhash64(trim(col("line")))))
     val boiler = lines.filter(trim(col("line")) =!= "")
@@ -1477,7 +1480,7 @@ object Dedup {
       maxDocFreq: Int = 1,
       keepFirst: Boolean = false): DataFrame = {
     val scope = new CacheScope
-    val base = Rebalance.scanAware(docs)
+    val base = Rebalance.spread(docs)
       .select(col(idCol).as("id"), col(textCol).as("text"))
     val wins = scope.persist(base.select(col("id"),
       posexplode(Kernels.tokenWindowHashes(col("text"), minLen)).as(Seq("s", "h"))))
@@ -1520,7 +1523,7 @@ object Dedup {
       nPlanes: Int = 10,
       maxBucket: Int = 2000,
       saltCap: Int = 50000): DataFrame = {
-    val b = Rebalance.scanAware(emb).select(col(idCol).as("id"), col(vecCol).as("v"),
+    val b = Rebalance.spread(emb).select(col(idCol).as("id"), col(vecCol).as("v"),
       Kernels.hyperplaneBucket(col(vecCol), nPlanes).as("bucket"))
     // same skew guards as the text LSH joins: embedding spaces cluster
     // (a hot LSH cell of boilerplate-adjacent vectors), so the bucket
@@ -1548,7 +1551,7 @@ object Dedup {
       threshold: Double = 0.95,
       maxBucket: Int = 2000,
       saltCap: Int = 50000): DataFrame = {
-    val b = Rebalance.scanAware(emb).select(col(idCol).as("id"), col(vecCol).as("v"),
+    val b = Rebalance.spread(emb).select(col(idCol).as("id"), col(vecCol).as("v"),
       element_at(Kernels.nearestCentroids(col(vecCol), centroids, 1), 1).as("cluster"))
     val scope = new CacheScope
     scope.releaseAfter(bucketSelfJoin(b, "cluster", Seq("id", "v"), maxBucket, saltCap, scope)
@@ -1589,7 +1592,7 @@ object Dedup {
       shingleN: Int = 3, k: Int = 4096): KmvSketch = {
     require(shingleN >= 1 && k >= 1, s"shingleN/k: $shingleN/$k")
     KmvSketch(
-      Rebalance.scanAware(docs)
+      Rebalance.spread(docs)
         .select(explode(Kernels.wordShingles(col(textCol), shingleN)).as("s"))
         .select(xxhash64(col("s")).as("h")).distinct()
         .orderBy(col("h").asc).limit(k)

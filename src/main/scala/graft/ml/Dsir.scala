@@ -49,7 +49,7 @@ object Dsir {
     require(nGram > 0, s"nGram: $nGram")
     require(buckets > 0, s"buckets: $buckets")
     def counts(df: DataFrame, textCol: String, name: String): DataFrame =
-      graft.operators.Rebalance.scanAware(df)
+      graft.operators.Rebalance.spread(df)
         .select(explode(Kernels.wordShingles(col(textCol), nGram)).as("__sh"))
         .select(pmod(xxhash64(col("__sh"), lit(seed)), lit(buckets.toLong)).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as(name))
@@ -127,7 +127,7 @@ object Dsir {
     val (nGram, buckets, seed, floor) =
       try header(r)
       catch { case e: Throwable => if (!callerCached) scope.releaseNow(); throw e }
-    val perDoc = graft.operators.Rebalance.scanAware(raw)
+    val perDoc = graft.operators.Rebalance.spread(raw)
       .select(col(idCol), explode(Kernels.wordShingles(col(textCol), nGram)).as("__sh"))
       .select(col(idCol), pmod(xxhash64(col("__sh"), lit(seed)), lit(buckets.toLong)).as("bucket"))
       .join(broadcast(r.select("bucket", "log_ratio")), Seq("bucket"), "left")

@@ -68,7 +68,7 @@ object Perplexity {
     require(buckets > 0, s"buckets: $buckets")
     require(order == 2 || order == 3, s"order: $order (2 or 3)")
     require(smoothing == "jm" || smoothing == "kn", s"smoothing: $smoothing")
-    val src = graft.operators.Rebalance.scanAware(corpus)
+    val src = graft.operators.Rebalance.spread(corpus)
     def counts(n: Int, kind: Int): DataFrame = src
       .select(explode(Kernels.wordShingles(col(textCol), n)).as("__sh"))
       .select(pmod(xxhash64(col("__sh"), lit(seed)), lit(buckets.toLong)).as("bucket"))
@@ -151,7 +151,7 @@ object Perplexity {
       lambda: Double = 0.8, discount: Double = 0.75): DataFrame = {
     require(lambda > 0.0 && lambda < 1.0, s"lambda: $lambda")
     require(discount > 0.0 && discount < 1.0, s"discount: $discount")
-    val srcDocs = graft.operators.Rebalance.scanAware(docs)
+    val srcDocs = graft.operators.Rebalance.spread(docs)
     // The model plan (order× shuffles over the whole reference corpus)
     // is read several times below (per-kind frames + header) — persist
     // it through a scope that drains after the caller's first action, so

@@ -152,7 +152,7 @@ object UnigramLm {
       seedFactor: Int = 4, emIters: Int = 2, keepFrac: Double = 0.8): Model = {
     require(vocabSize > 36 && maxPieceLen >= 2 && seedFactor >= 1,
       s"vocabSize/maxPieceLen/seedFactor: $vocabSize/$maxPieceLen/$seedFactor")
-    val types = graft.operators.Rebalance.scanAware(corpus)
+    val types = graft.operators.Rebalance.spread(corpus)
       .select(explode(Kernels.wordShingles(col(textCol), 1)).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__c"))
       .orderBy(desc("__c"), asc("__w")).limit(maxTypes)

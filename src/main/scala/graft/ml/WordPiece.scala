@@ -171,7 +171,7 @@ object WordPiece {
       maxTypes: Int = 100000, minCount: Long = 2L): Model = {
     require(numMerges > 0 && maxTypes > 0 && minCount >= 1,
       s"numMerges/maxTypes/minCount: $numMerges/$maxTypes/$minCount")
-    val types = graft.operators.Rebalance.scanAware(corpus)
+    val types = graft.operators.Rebalance.spread(corpus)
       .select(explode(Kernels.wordShingles(col(textCol), 1)).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__c"))
       .orderBy(desc("__c"), asc("__w")).limit(maxTypes)

@@ -1,7 +1,7 @@
 package graft.sources
 
+import graft.operators.Rebalance
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Export surface (tablite/export_utils.py). Distributed writers for the
@@ -12,74 +12,12 @@ import org.apache.spark.sql.types._
   */
 object Writers {
 
-  /** Writers inherit the scan's partitioning, so a table read from one
-    * modest file writes single-task while 31 cores idle. When the plan
-    * has fewer partitions than the cluster has slots, fan out before
-    * writing (round-robin — cheap, no key shuffle). At real scale the
-    * input already has >= cores partitions and this is a no-op, which is
-    * exactly the right behavior: never add a shuffle to a big write.
-    */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val slots = spark.sparkContext.defaultParallelism
-    // Planning only — never touch df.rdd here. With AQE on, .rdd finalizes
-    // the adaptive plan and EXECUTES every upstream stage; the subsequent
-    // .write is a new QueryExecution with no cross-execution exchange
-    // reuse, so the whole upstream pipeline would run twice per save.
-    val plan = df.queryExecution.sparkPlan
-    val hasExchange = plan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
-      case _ => false
-    }
-    if (hasExchange) df // shuffle output already lands on ~shuffle.partitions tasks
-    else {
-      // narrow scan-rooted plan: estimate scan parallelism the way
-      // FilePartition packing actually computes it — (bytes + openCost
-      // per file) / maxPartitionBytes — all metadata, no job. A raw
-      // file COUNT would overestimate badly: 64 tiny files pack into
-      // ~1 scan partition, and the old count-based check skipped the
-      // fan-out exactly when it was needed.
-      val maxPartBytes = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
-      val openCost = spark.sessionState.conf.filesOpenCostInBytes
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val packed = bytes + BigInt(openCost) * df.inputFiles.length
-      val estParts = ((packed + maxPartBytes - 1) / BigInt(maxPartBytes)).toLong
-      if (estParts >= slots) df
-      else {
-        // r15 (guide §2.5): keyless repartition(n) is round-robin and
-        // pays a FULL LOCAL SORT of its input first
-        // (spark.sql.execution.sortBeforeRepartition, on since
-        // SPARK-23207 so retried map tasks reproduce the same row→
-        // partition assignment). On an under-split scan that sort is
-        // single-task and dominates the whole write (measured sf0.1
-        // lineitem, 600k rows: repartition(32)+noop 1.07 s vs 0.23 s
-        // scan-only — the io_* write rows were ~70% sort). Hashing a
-        // DETERMINISTIC synthetic key derived from the row content gives
-        // the same even spread with no sort and stays retry-safe (the
-        // guide's pmod(xxhash64(...), k·n) recipe): 64× more key values
-        // than partitions so the second hash spreads evenly. Rows with
-        // identical content co-locate — harmless unless the table is
-        // mostly ONE repeated row. Hash expressions reject MapType, so
-        // frames carrying maps keep the round-robin path.
-        def hashable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-          case _: org.apache.spark.sql.types.MapType => false
-          case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-          case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-          case _ => true
-        }
-        if (df.schema.fields.forall(f => hashable(f.dataType)))
-          df.repartition(slots, pmod(xxhash64(df.columns.map(col): _*), lit(slots * 64)))
-        else df.repartition(slots)
-      }
-    }
-  }
-
   /** CSV/TSV/TXT by suffix (export_utils.py:153-187; delimiter defaults
     * core.py:131-137). None → "" matches the reference's empty-string
     * null encoding.
     */
   def writeDelimited(df: DataFrame, path: String, delimiter: String = ","): Unit =
-    fanOut(df).write.mode(SaveMode.Overwrite)
+    Rebalance.spread(df).write.mode(SaveMode.Overwrite)
       .option("sep", delimiter)
       .option("header", "true")
       .option("emptyValue", "")
@@ -99,15 +37,15 @@ object Writers {
     * predicate pushdown.
     */
   def save(df: DataFrame, path: String): Unit =
-    fanOut(df).write.mode(SaveMode.Overwrite).parquet(path)
+    Rebalance.spread(df).write.mode(SaveMode.Overwrite).parquet(path)
 
   /** ORC sink — the other columnar format Spark ships natively
     * (stripe-level statistics give the same pushdown/pruning story as
     * parquet; for Hive/Trino-adjacent deployments that standardize on
-    * ORC). Same fan-out rule as [[save]].
+    * ORC). Same [[Rebalance.spread]] rule as [[save]].
     */
   def toOrc(df: DataFrame, path: String): Unit =
-    fanOut(df).write.mode(SaveMode.Overwrite).orc(path)
+    Rebalance.spread(df).write.mode(SaveMode.Overwrite).orc(path)
 
   /** Hive-style partitioned parquet layout: one directory per distinct
     * value tuple of `cols`. The 100 TB pruning tool for
@@ -240,7 +178,7 @@ object Writers {
     * set).
     */
   def toJsonl(df: DataFrame, path: String, compression: Option[String] = None): Unit = {
-    val w = fanOut(df).write.mode(SaveMode.Overwrite)
+    val w = Rebalance.spread(df).write.mode(SaveMode.Overwrite)
     compression.fold(w)(c => w.option("compression", c)).json(path)
   }
 

@@ -63,6 +63,17 @@ class DedupCorpusSpec extends SparkSpec {
     assert(kept === Array(1L, 5L))
   }
 
+  test("dedupedCorpus keeps the caller's own 'id' and 'label' columns " +
+      "(the embeddings table shape)") {
+    val docs = Seq((1L, 7, "x"), (2L, 8, "y"), (3L, 9, "z"), (5L, 4, "w"))
+      .toDF("id", "label", "payload")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val kept = Dedup.dedupedCorpus(docs, "id", pairs)
+    assert(kept.columns.toSeq === Seq("id", "label", "payload"))
+    assert(kept.select("id", "label").as[(Long, Int)].collect().sorted ===
+      Array((1L, 7), (5L, 4)))
+  }
+
   test("canonicalPerCluster keeps the highest-score member per cluster, " +
       "smallest id on ties, all unpaired docs") {
     val docs = Seq(
